@@ -20,7 +20,7 @@ import re
 from dataclasses import dataclass
 from typing import Union
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from lakeside_spark import schema as S
@@ -138,6 +138,14 @@ def formula_labels(ast: FormulaAST) -> set[str]:
     return set()
 
 
+_SCALAR_OPS = {
+    "add": lambda a, b: a + b,
+    "sub": lambda a, b: a - b,
+    "mul": lambda a, b: a * b,
+    "div": lambda a, b: a / b,
+}
+
+
 def eval_formula(
     ast: FormulaAST,
     series: dict[str, DataFrame],
@@ -159,13 +167,7 @@ def eval_formula(
             df = series[node.name]
             return df.select(*join_keys, S.VALUE)
         left, right = rec(node.e1), rec(node.e2)
-        scalar_ops = {
-            "add": lambda a, b: a + b,
-            "sub": lambda a, b: a - b,
-            "mul": lambda a, b: a * b,
-            "div": lambda a, b: a / b,
-        }
-        op = scalar_ops[node.op]
+        op = _SCALAR_OPS[node.op]
         if isinstance(left, float) and isinstance(right, float):
             return op(left, right)
         if isinstance(right, float):
@@ -192,6 +194,55 @@ def eval_formula(
                 joined = joined.filter(F.col(rv) != 0)
             value = op(F.col(lv), F.col(rv))
         return joined.select(*join_keys, value.alias(S.VALUE))
+
+    out = rec(ast)
+    if isinstance(out, float):
+        raise ValueError("Formula must reference at least one series")
+    return out
+
+
+def eval_formula_columns(
+    ast: FormulaAST, values: dict[str, Column], present: dict[str, Column]
+) -> tuple[Column, Column]:
+    """:func:`eval_formula` over series held as columns of one frame with a
+    row per step: ``values[x]`` is series x's value on a row and
+    ``present[x]`` whether series x has that step. Returns the formula's
+    (value, present) columns with the join semantics above: add keeps a
+    step either side has and zero-fills the other, sub/mul/div keep steps
+    both sides have, div also drops a zero (or null) denominator. Each
+    result is masked by its presence (CASE WHEN), so no division ever sees
+    the denominator of a dropped step."""
+
+    def rec(node: FormulaAST) -> tuple[Column, Column] | float:
+        if isinstance(node, Const):
+            return node.value
+        if isinstance(node, Var):
+            return values[node.name], present[node.name]
+        left, right = rec(node.e1), rec(node.e2)
+        op = _SCALAR_OPS[node.op]
+        if isinstance(left, float) and isinstance(right, float):
+            return op(left, right)
+        if isinstance(right, float):
+            value, keep = left
+            if node.op == "div" and right == 0:
+                return value, F.lit(False)
+            return op(value, F.lit(right)), keep
+        if isinstance(left, float):
+            value, keep = right
+            if node.op == "div":
+                keep = keep & F.coalesce(value != 0, F.lit(False))
+            return F.when(keep, op(F.lit(left), value)), keep
+        (lv, lp), (rv, rp) = left, right
+        if node.op == "add":
+            zero = F.lit(0.0)
+            return (
+                F.coalesce(F.when(lp, lv), zero) + F.coalesce(F.when(rp, rv), zero),
+                lp | rp,
+            )
+        keep = lp & rp
+        if node.op == "div":
+            keep = keep & F.coalesce(rv != 0, F.lit(False))
+        return F.when(keep, op(lv, rv)), keep
 
     out = rec(ast)
     if isinstance(out, float):

@@ -319,7 +319,7 @@ class QueryEngine:
         branches: list[tuple[str, BaseExpr]],
         df: DataFrame,
         step_ms: int,
-    ) -> dict[str, DataFrame]:
+    ) -> tuple[dict[str, DataFrame], DataFrame | None]:
         """Evaluate N same-shaped chart branches in ONE scan + ONE shuffle.
 
         The unfused path scans the fact table once per labeled expression
@@ -329,7 +329,13 @@ class QueryEngine:
         over the OR of all branch filters, plus a matched-row count whose
         ``> 0`` filter reconstructs exactly the per-branch group
         presence/absence the separate runs would produce (a step where
-        only the other branch matched must stay missing, not zero)."""
+        only the other branch matched must stay missing, not zero).
+
+        Returns the label frames and, when every branch is a count or a
+        sum, the per-step frame (``step_ts, __v{i}, __n{i}``): a formula's
+        input is the per-step sum of each series, and for count and sum
+        that is the branch's own aggregate over the whole step, so the
+        same scan yields it as a second grouping set."""
         cols = set(df.columns)
         conds = {
             label: filter_to_column(e.filter, cols) for label, e in branches
@@ -368,20 +374,54 @@ class QueryEngine:
             aggs.append(
                 F.count(F.when(conds[label], F.lit(1))).alias(f"__n{i}")
             )
-        # materialized once (eager localCheckpoint): every label (and each
-        # formula referencing it) consumes this frame, and exchange reuse
-        # does not reliably dedupe the subtrees across union branches —
-        # without it N consumers mean N scans of the fact table. The frame
-        # is post-aggregation (steps × names rows, KBs); checkpoint blocks
-        # are context-cleaned once the DataFrames become unreachable
-        # (persist leaked a CacheManager entry per call, r13).
-        agged = df.groupBy(*keys).agg(*aggs).localCheckpoint(eager=True)
-        return {
-            label: agged.filter(F.col(f"__n{i}") > 0).select(
+        # materialized once, on the driver: every label (and each formula
+        # referencing it) consumes this frame, and exchange reuse does not
+        # reliably dedupe the subtrees across union branches — without it
+        # N consumers mean N scans of the fact table. The frame is
+        # post-aggregation (steps × names rows, KBs) and every label is
+        # collected by the caller anyway; as a local relation the label
+        # frames (and fused formulas) collect without a Spark job.
+        per_step = all(e.chart.aggregation in (S.COUNT, S.SUM) for _, e in branches)
+        by_step = per_step and len(sel_keys) > 1
+        if by_step:
+            grouped = df.withColumn(S.STEP_TS, step_col).groupingSets(
+                [sel_keys, [S.STEP_TS]], *sel_keys
+            )
+            aggs.append(F.grouping_id().alias("__gid"))
+        else:
+            grouped = df.groupBy(*keys)
+        agged = grouped.agg(*aggs)
+        agged = DataFrame(
+            self.spark._jsparkSession.createDataFrame(
+                agged._jdf.collectAsList(), agged._jdf.schema()
+            ),
+            self.spark,
+        )
+        rows = agged.filter(F.col("__gid") == 0) if by_step else agged
+        frames = {
+            label: rows.filter(F.col(f"__n{i}") > 0).select(
                 *sel_keys, F.col(f"__v{i}").alias(S.VALUE)
             )
             for i, (label, _) in enumerate(branches)
         }
+        if by_step:
+            return frames, agged.filter(F.col("__gid") != 0)
+        return frames, agged if per_step else None
+
+    @staticmethod
+    def _formula_fused(ast, labels: list[str], steps: DataFrame) -> DataFrame:
+        """A formula over branches of one fused aggregation, evaluated
+        across the columns of its per-step frame instead of by a join per
+        operator; same rows as :func:`eval_formula` over the per-label
+        global series. The frame is local, so this starts no Spark job."""
+        from lakeside_spark.ast.formula import eval_formula_columns
+
+        value, keep = eval_formula_columns(
+            ast,
+            {label: F.col(f"__v{i}") for i, label in enumerate(labels)},
+            {label: F.col(f"__n{i}") > 0 for i, label in enumerate(labels)},
+        )
+        return steps.filter(keep).select(S.STEP_TS, value.alias(S.VALUE))
 
     def _run_exemplars(self, expr: BaseExpr, df: DataFrame) -> DataFrame:
         """Raw-row query (reference: BaseExpr.scala:237-239): ORDER BY
@@ -440,9 +480,13 @@ class QueryEngine:
             else:
                 solo[label] = e
         out: dict[str, DataFrame] = {}
+        fused: list[tuple[list[str], DataFrame]] = []
         for batch in groups.values():
             if len(batch) >= 2:
-                out.update(self._run_chart_fused(batch, scoped, step_ms))
+                frames, steps = self._run_chart_fused(batch, scoped, step_ms)
+                out.update(frames)
+                if steps is not None:
+                    fused.append(([label for label, _ in batch], steps))
             else:
                 solo[batch[0][0]] = batch[0][1]
         out.update(
@@ -451,20 +495,29 @@ class QueryEngine:
                 for label, e in solo.items()
             }
         )
-        if formulae:
-            global_series = {
-                label: s.groupBy(S.STEP_TS).agg(F.sum(S.VALUE).alias(S.VALUE))
-                for label, s in out.items()
-            }
-            for f in formulae:
-                ast = parse_formula(f)
-                missing = formula_labels(ast) - set(global_series)
-                if missing:
-                    raise ValueError(
-                        f"formula `{f}` references unknown expression id(s): "
-                        f"{sorted(missing)}"
-                    )
-                out[f] = eval_formula(ast, global_series)
+        series = dict(out)
+        global_series: dict[str, DataFrame] = {}
+        for f in formulae or ():
+            ast = parse_formula(f)
+            used = formula_labels(ast)
+            missing = used - set(series)
+            if missing:
+                raise ValueError(
+                    f"formula `{f}` references unknown expression id(s): "
+                    f"{sorted(missing)}"
+                )
+            # a formula over count/sum branches of one fused aggregation
+            # reads its per-step frame; any other goes through the joins
+            home = next((fb for fb in fused if used and used <= set(fb[0])), None)
+            if home is not None:
+                out[f] = self._formula_fused(ast, *home)
+                continue
+            if not global_series:
+                global_series = {
+                    label: s.groupBy(S.STEP_TS).agg(F.sum(S.VALUE).alias(S.VALUE))
+                    for label, s in series.items()
+                }
+            out[f] = eval_formula(ast, global_series)
         return out
 
     def query_cardinality(

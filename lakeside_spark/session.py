@@ -1,8 +1,9 @@
 """SparkSession factory with scale-oriented defaults.
 
 Defaults chosen for correctness parity with the DuckDB oracle (UTC session
-timezone, ANSI off) and for 100 TB-scale execution (AQE with skew-join
-handling, partition coalescing, Arrow for the few Pandas-UDF operators).
+timezone; ANSI mode is left at Spark 4's default, ``spark.sql.ansi.enabled``
+true) and for 100 TB-scale execution (AQE with skew-join handling,
+partition coalescing, Arrow for the few Pandas-UDF operators).
 """
 
 from __future__ import annotations

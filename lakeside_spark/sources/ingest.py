@@ -77,13 +77,16 @@ def ingest_files(
     tag_columns: tuple[str, ...] = (),
 ) -> int:
     """End-to-end ingest: read → normalize → seal into the partitioned
-    segment lake. Returns the ingested row count (one extra action — the
-    write itself is the only full pass at scale when the count is not
-    needed; callers that don't want it use the readers + write_segments
-    directly)."""
+    segment lake. Returns the ingested row count, observed on the frame as
+    the write passes over it: the source is parsed once, by the write."""
+    from pyspark.sql import Observation
+
     from lakeside_spark.sources.segments import write_segments
 
     reader = {"jsonl": read_jsonl_telemetry, "csv": read_csv_telemetry}[fmt]
-    telemetry = reader(spark, src_path, tag_columns)
+    rows = Observation("ingest_files")
+    telemetry = reader(spark, src_path, tag_columns).observe(
+        rows, F.count(F.lit(1)).alias("rows")
+    )
     write_segments(telemetry, lake_path, dataset=dataset)
-    return telemetry.count()
+    return rows.get["rows"]

@@ -42,16 +42,15 @@ Spark-native equivalent implemented here:
 
 from __future__ import annotations
 
-import json
 import os
 from dataclasses import dataclass, field
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from lakeside_spark import schema as S
 from lakeside_spark.ast.model import BinaryClause, Filter, NotClause, QueryClause
+from lakeside_spark.sources.segments import lake_reader, seal_schema
 
 try:  # python 3.11+: re._parser; older: sre_parse
     from re import _parser as sre_parse  # type: ignore[attr-defined]
@@ -60,7 +59,6 @@ except ImportError:  # pragma: no cover
 
 EXISTS_VALUE = ".*"  # reference EXISTS_REGEX (Commons.scala:61)
 INDEX_DIR = "_trigram_index"
-SCHEMA_FILE = "_schema.json"
 
 # operator tags mirroring TrigramQuery.Op (NLPUtils.scala:35):
 # reference 0=match-all, 2=and, 3=or
@@ -253,8 +251,10 @@ def build_trigram_index(
     """One distributed pass: per segment file, the distinct fingerprint
     set (exists + full-value + trigram), stored as xxhash64 longs in the
     ``_trigram_index`` sidecar. Incremental production ingest would append
-    one small index file per sealed segment instead of rebuilding."""
-    lake = spark.read.option("mergeSchema", "true").parquet(path)
+    one small index file per sealed segment instead of rebuilding. The
+    lake's ``_schema.json`` is (re)sealed from the same read, so a lake
+    written before schemas were sealed gets one here."""
+    lake = lake_reader(spark, path).parquet(path)
     # input_file_name() yields a file: URI; store the path relative to the
     # lake root so the lake (and its sidecar) can move together
     base = os.path.abspath(path).rstrip("/")
@@ -309,20 +309,7 @@ def build_trigram_index(
         .write.mode("overwrite")
         .parquet(os.path.join(path, INDEX_DIR))
     )
-    # Persist the lake's merged schema beside the index: the pruned read
-    # can then hand Spark an explicit schema instead of mergeSchema, which
-    # re-reads EVERY surviving segment footer at plan-build time (~2ms per
-    # file — fatal at a million segments). The index build is the natural
-    # place: it already merge-read the lake, and a segment added without
-    # reindexing is stale for pruning anyway, so schema staleness has the
-    # same remedy (rebuild).
-    # atomic (tmp+rename): a reader racing a rebuild must see either the
-    # old complete schema or the new one, never a truncated file
-    schema_path = os.path.join(path, INDEX_DIR, SCHEMA_FILE)
-    tmp_path = schema_path + ".tmp"
-    with open(tmp_path, "w") as fh:
-        fh.write(lake.schema.json())
-    os.replace(tmp_path, schema_path)
+    seal_schema(path, lake.schema)
 
 
 # ---------------------------------------------------------------------------
@@ -450,20 +437,6 @@ def read_segments_indexed(
         spark, path, clause, indexed_dims, full_value_dims, collect_all=False
     )
 
-    # explicit schema (persisted at index-build time) skips the per-file
-    # footer reads mergeSchema pays at plan time; absent (pre-existing
-    # lake, index built by an older version) fall back to merging
-    def reader():
-        r = spark.read
-        schema_path = os.path.join(path, INDEX_DIR, SCHEMA_FILE)
-        try:
-            with open(schema_path) as fh:
-                return r.schema(T.StructType.fromJson(json.load(fh)))
-        except (OSError, ValueError, KeyError):
-            # missing, corrupt, or wrong-shape sidecar — degrade to the
-            # footer-merging read rather than failing the query
-            return r.option("mergeSchema", "true")
-
     if files is None:
         # nothing pruned: one directory listing, no driver-side file
         # list. On a STALE index (segments sealed after the last
@@ -472,9 +445,9 @@ def read_segments_indexed(
         # can only see indexed files, so index freshness is the
         # caller's contract (rebuild after sealing), same as the
         # reference's segment index.
-        df = reader().parquet(path)
+        df = lake_reader(spark, path).parquet(path)
     elif not files:
-        return reader().parquet(path).filter(F.lit(False))
+        return lake_reader(spark, path).parquet(path).filter(F.lit(False))
     else:
-        df = reader().option("basePath", path).parquet(*files)
+        df = lake_reader(spark, path).option("basePath", path).parquet(*files)
     return df.filter(filter_to_column(clause, set(df.columns)))

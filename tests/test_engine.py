@@ -402,3 +402,44 @@ def test_run_graph_fused_matches_unfused_exactly(spark):
         tele,
     )["a"])
     assert {r[0] for r in got_a} == {0, 20_000}
+
+
+def test_fused_formula_matches_join_evaluation(spark):
+    """Formulas over branches of one fused aggregation are evaluated across
+    columns of its local frame; they must give the rows of eval_formula's
+    joins over the per-label global series: zero-fill for add, inner for
+    sub/mul/div, zero denominators dropped, constants folded."""
+    from lakeside_spark.ast.formula import eval_formula, parse_formula
+
+    rows = [
+        (0, "error", 1.0), (0, "error", 3.0),          # step 0: only a
+        (10_000, "ok", 5.0),                           # step 1: only b
+        (20_000, "error", 2.0), (20_000, "ok", 7.0),   # step 2: both
+        (30_000, "error", 4.0), (30_000, "ok", 0.0),   # step 3: b sums to 0
+    ]
+    tele = spark.createDataFrame(
+        rows, f"{S.TIMESTAMP} long, {S.NAME} string, {S.VALUE} double"
+    )
+    eng = QueryEngine(spark, step_ms=10_000)
+    for agg in ("count", "sum", "min", "max", "avg"):
+        exprs = {
+            label: BaseExpr(
+                filter=Filter(k=S.NAME, v=(name,), op=S.EQ),
+                chart=ChartOptions(aggregation=agg),
+            )
+            for label, name in (("a", "error"), ("b", "ok"))
+        }
+        series = {
+            label: eng.run(e, tele)
+            .groupBy(S.STEP_TS)
+            .agg(F.sum(S.VALUE).alias(S.VALUE))
+            for label, e in exprs.items()
+        }
+        formulae = [
+            "a + b", "a - b", "a * b", "a / b", "(a - b) / b", "1 / b",
+            "a / 0", "2 * a + 1", "b", "(a + b) / (a - b)", "10 - a / (b + 1)",
+        ]
+        out = eng.run_graph(exprs, formulae, tele)
+        for f in formulae:
+            want = eval_formula(parse_formula(f), series)
+            assert rows_set(out[f]) == rows_set(want), (agg, f)

@@ -1,14 +1,62 @@
 """Segment lake layout: round-trip + partition pruning verification."""
 
+import os
 import shutil
 import tempfile
+import uuid
+from contextlib import contextmanager
 
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
 from lakeside_spark import schema as S
 from lakeside_spark.schema import load_telemetry
-from lakeside_spark.sources.segments import read_segments, write_segments
+from lakeside_spark.sources.segments import (
+    SCHEMA_FILE,
+    compact_segments,
+    read_segments,
+    write_segments,
+)
+
+
+@contextmanager
+def jobs_started(spark):
+    """Collects the ids of the Spark jobs started inside the block."""
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    ids: list[int] = []
+    try:
+        yield ids
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        ids.extend(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def merge_read(spark, path):
+    return spark.read.option("mergeSchema", "true").parquet(path)
+
+
+def shape(schema):
+    return [(f.name, f.dataType, f.nullable) for f in schema.fields]
+
+
+def raw_hive_lake(spark, sf_dir, path):
+    """A lake written straight by Spark, without write_segments: no
+    _schema.json, 16 small files per partition."""
+    ts = F.timestamp_millis(F.col("timestamp_ms"))
+    (
+        load_telemetry(spark, sf_dir)
+        .withColumn("dataset", F.lit("logs"))
+        .withColumn("dateint", F.date_format(ts, "yyyyMMdd").cast("int"))
+        .withColumn("hour", F.date_format(ts, "HH").cast("int"))
+        .repartition(16)
+        .write.mode("overwrite")
+        .partitionBy("dataset", "dateint", "hour")
+        .parquet(path)
+    )
 
 
 @pytest.fixture(scope="module")
@@ -49,23 +97,9 @@ def test_partition_pruning_in_plan(spark, lake):
 def test_compaction_reduces_files_preserves_rows(spark, sf_dir, tmp_path):
     import glob
 
-    from lakeside_spark.sources.segments import compact_segments, write_segments
-    from lakeside_spark.sources.tables import load_table
-    from lakeside_spark.schema import load_telemetry
-
     lake = str(tmp_path / "lake")
-    tele = load_telemetry(spark, sf_dir)
     # simulate many tiny sealed segments: 16 files per partition
-    from pyspark.sql import functions as F
-
-    ts = F.timestamp_millis(F.col("timestamp_ms"))
-    df = (
-        tele.withColumn("dataset", F.lit("logs"))
-        .withColumn("dateint", F.date_format(ts, "yyyyMMdd").cast("int"))
-        .withColumn("hour", F.date_format(ts, "HH").cast("int"))
-        .repartition(16)
-    )
-    df.write.mode("overwrite").partitionBy("dataset", "dateint", "hour").parquet(lake)
+    raw_hive_lake(spark, sf_dir, lake)
     rows_before = spark.read.parquet(lake).count()
     files_before = len(glob.glob(f"{lake}/**/*.parquet", recursive=True))
     compact_segments(spark, lake, target_file_bytes=64 * 1024 * 1024)
@@ -109,6 +143,8 @@ def test_compaction_failure_leaves_source_intact(spark, sf_dir, tmp_path, monkey
     tele = load_telemetry(spark, sf_dir).limit(500)
     write_segments(tele, lake, dataset="logs")
     before = read_segments(spark, lake, dataset="logs").count()
+    with open(os.path.join(lake, SCHEMA_FILE)) as fh:
+        sealed = fh.read()
 
     import os as os_mod
 
@@ -120,6 +156,9 @@ def test_compaction_failure_leaves_source_intact(spark, sf_dir, tmp_path, monkey
         seg.compact_segments(spark, lake)
     monkeypatch.undo()
     assert read_segments(spark, lake, dataset="logs").count() == before
+    with open(os.path.join(lake, SCHEMA_FILE)) as fh:
+        assert fh.read() == sealed
+    assert not os.path.exists(lake + ".compact.tmp")
 
 
 def test_jsonl_ingest_roundtrip(spark, tmp_path):
@@ -142,9 +181,15 @@ def test_jsonl_ingest_roundtrip(spark, tmp_path):
     assert tele.count() == 6
     assert tele.columns == ["timestamp_ms", "name", "value", "message", "host"]
 
+    # the count is observed on the write's own pass: ingest_files starts
+    # exactly the jobs of sealing the same frame, no extra count job
+    with jobs_started(spark) as seal_jobs:
+        write_segments(tele, str(tmp_path / "sealed"), dataset="logs")
     lake = tmp_path / "lake"
-    n = ingest_files(spark, str(src), str(lake), fmt="jsonl", tag_columns=("host",))
+    with jobs_started(spark) as ingest_jobs:
+        n = ingest_files(spark, str(src), str(lake), fmt="jsonl", tag_columns=("host",))
     assert n == 6
+    assert len(ingest_jobs) == len(seal_jobs) > 0
     from lakeside_spark.sources.segments import read_segments
 
     back = read_segments(spark, str(lake), dataset="logs")
@@ -165,3 +210,103 @@ def test_csv_ingest(spark, tmp_path):
     tele = read_csv_telemetry(spark, str(src), tag_columns=("region",))
     got = {(r["name"], r["region"]) for r in tele.collect()}
     assert got == {("error", "us"), ("info", "eu")}
+
+
+def check_sealed(spark, lake):
+    """The sealed schema equals the mergeSchema read's (names, types,
+    nullability, order), and opening the lake starts no Spark job."""
+    assert os.path.exists(os.path.join(lake, SCHEMA_FILE))
+    with jobs_started(spark) as jobs:
+        df = read_segments(spark, lake, dataset="logs", start_ts=0, end_ts=4_102_444_800_000)
+    assert jobs == []
+    assert shape(df.schema) == shape(merge_read(spark, lake).schema)
+
+
+def check_layout(lake):
+    """One parquet file per (dataset, dateint, hour) directory, its rows
+    ordered by (timestamp_ms, name)."""
+    leaves = [(d, fs) for d, _, fs in os.walk(lake) if os.path.basename(d).startswith("hour=")]
+    assert len(leaves) > 1
+    for d, fs in leaves:
+        files = [f for f in fs if f.endswith(".parquet")]
+        assert len(files) == 1, (d, files)
+        t = pq.read_table(os.path.join(d, files[0]), columns=[S.TIMESTAMP, S.NAME])
+        keys = list(zip(t.column(0).to_pylist(), t.column(1).to_pylist()))
+        assert keys == sorted(keys, key=lambda k: (k[0], k[1] is not None, k[1] or "")), d
+
+
+def test_sealed_schema_and_layout_survive_compaction(spark, sf_dir, tmp_path):
+    lake = str(tmp_path / "sealed")
+    # shuffled input, so the (ts, name) order in the files is the seal's
+    tele = load_telemetry(spark, sf_dir).orderBy(F.rand(7))
+    write_segments(tele, lake, dataset="logs")
+    check_sealed(spark, lake)
+    check_layout(lake)
+    compact_segments(spark, lake)
+    check_sealed(spark, lake)
+    check_layout(lake)
+    assert read_segments(spark, lake, dataset="logs").count() == tele.count()
+
+
+def test_empty_sealed_lake_reads_and_compacts(spark, sf_dir, tmp_path):
+    """An empty seal leaves no parquet file; the sealed schema still opens
+    the lake, and compaction's row-count check accepts zero rows."""
+    lake = str(tmp_path / "empty")
+    write_segments(load_telemetry(spark, sf_dir).limit(0), lake, dataset="logs")
+    compact_segments(spark, lake)
+    got = read_segments(spark, lake, dataset="logs")
+    assert got.count() == 0
+    assert S.TIMESTAMP in got.columns
+
+
+def test_lakes_without_a_valid_schema_file_fall_back_to_merge(spark, sf_dir, tmp_path):
+    raw = str(tmp_path / "raw")
+    raw_hive_lake(spark, sf_dir, raw)
+    corrupt = str(tmp_path / "corrupt")
+    write_segments(load_telemetry(spark, sf_dir), corrupt, dataset="logs")
+    with open(os.path.join(corrupt, SCHEMA_FILE), "w") as fh:
+        fh.write('{"type": "struct", "fields": [')
+    for lake in (raw, corrupt):
+        got = read_segments(spark, lake, dataset="logs")
+        want = merge_read(spark, lake)
+        assert shape(got.schema) == shape(want.schema)
+        assert got.count() == want.count() > 0
+        assert got.exceptAll(want).count() == 0
+
+
+def test_schema_file_only_for_local_lakes():
+    from lakeside_spark.sources.segments import _schema_path
+
+    assert _schema_path("/data/lake") == "/data/lake/_schema.json"
+    assert _schema_path("file:///data/lake") == "/data/lake/_schema.json"
+    assert _schema_path("s3a://bucket/lake") is None
+
+
+def files_listed(spark):
+    """Files Spark's file indexes have listed so far in this JVM."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.HiveCatalogMetrics
+    return metrics.METRIC_FILES_DISCOVERED().getCount()
+
+
+def test_sealed_lake_is_listed_once_per_schema_file(spark, sf_dir, tmp_path):
+    """read_segments lists a sealed lake once: a second read lists no file.
+    A compaction or a rewrite replaces _schema.json, and the next read sees
+    the new files and rows."""
+    lake = str(tmp_path / "lake")
+    tele = load_telemetry(spark, sf_dir)
+    write_segments(tele, lake, dataset="logs")
+    n = tele.count()
+    assert read_segments(spark, lake, dataset="logs").count() == n
+    before = files_listed(spark)
+    again = read_segments(spark, lake, dataset="logs", start_ts=0, end_ts=4_102_444_800_000)
+    assert files_listed(spark) == before
+    assert again.count() == n
+
+    compact_segments(spark, lake)
+    assert read_segments(spark, lake, dataset="logs").count() == n
+    assert files_listed(spark) > before
+
+    ts = tele.agg(F.min(S.TIMESTAMP)).first()[0]
+    first_hour = tele.filter(F.col(S.TIMESTAMP) < ts - ts % 3_600_000 + 3_600_000)
+    write_segments(first_hour, lake, dataset="logs")
+    assert read_segments(spark, lake, dataset="logs").count() == first_hour.count() < n
